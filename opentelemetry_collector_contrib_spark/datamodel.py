@@ -65,7 +65,7 @@ SOURCE_LOOKUP_SCHEMA = T.StructType(
     ]
 )
 
-# written by plans/checkpoint.py CheckpointedRunner._append — keep in sync
+# written by plans/checkpoint.py CheckpointedRunner.run — keep in sync
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -73,15 +73,6 @@ CHECKPOINT_SCHEMA = T.StructType(
         T.StructField("rows", T.LongType(), False),
         T.StructField("tokens", T.LongType(), False),
         T.StructField("wall_ms", T.LongType(), False),
-    ]
-)
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
         T.StructField("rows_in", T.LongType(), True),
-        T.StructField("rows_out", T.LongType(), True),
-        T.StructField("wall_ms", T.LongType(), True),
     ]
 )

@@ -1,14 +1,20 @@
-"""Checkpoint / lineage / exactly-once resume.
+"""Checkpoint / exactly-once resume.
 
 Reference: the filelog receiver persists per-file ``{Fingerprint, Offset}``
 metadata through a storage extension and resumes reading from saved offsets
 (`pkg/stanza/fileconsumer/internal/checkpoint/checkpoint.go:20-45`,
 `internal/reader/reader.go:50-122`). Dataset restatement: the unit of
 progress is a **chunk of input files** (the offset analog at table
-granularity); a chunk is committed by (1) an idempotent overwrite of that
-chunk's output directory, then (2) appending a checkpoint row. A killed run
+granularity); a chunk is committed by (1) idempotent overwrites of that
+chunk's output directories, then (2) appending a checkpoint row. A killed run
 re-processes at most the in-flight chunk, whose partial output the
 overwrite replaces — exactly-once output without a custom commit protocol.
+
+Each chunk costs three Spark actions: the routed-rows write (the only scan,
+render and grok of the input; an ``Observation`` counts ``rows_in`` on the
+way), the aggregates write (read back from the routed rows just written,
+pruned to the four columns it groups and sums; a second ``Observation``
+totals it for the checkpoint row) and the one-row checkpoint append.
 
 At 10^12-row scale each chunk is itself a fully parallel Spark job over
 hundreds of files; the driver loop adds one scheduling round-trip per chunk
@@ -18,8 +24,10 @@ Layout under ``out_dir``:
   data/chunk=<id>/route=<r>/*.parquet   routed rows (per-route sinks)
   aggs/chunk=<id>/*.parquet             per-chunk pre-aggregates
   checkpoint/*.parquet                  CHECKPOINT_SCHEMA (run_id, chunk_id,
-                                        rows, tokens, wall_ms)
-  lineage/*.parquet                     (run_id, stage, rows_in, rows_out, wall_ms)
+                                        rows, tokens, wall_ms, rows_in)
+
+Per-chunk metrics live in the checkpoint row itself, so they are committed
+exactly once with their chunk; ``metrics()`` projects them.
 
 Readers (``routed()`` / ``aggregates()``) see COMMITTED chunks only: the
 chunk partition column is filtered against the checkpoint table, so a chunk
@@ -30,13 +38,15 @@ the exactly-once read view holds at all times, not just after resume.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ..datamodel import CHECKPOINT_SCHEMA
+from .pipeline import aggregate_stage
 
 
 class CheckpointedRunner:
@@ -81,11 +91,6 @@ class CheckpointedRunner:
             for r in spark.read.parquet(path).select("chunk_id").distinct().collect()
         }
 
-    def _append(self, spark: SparkSession, sub: str, rows: list[dict], schema) -> None:
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
-            f"{self.out_dir}/{sub}"
-        )
-
     # ------------------------------------------------------------------ run
 
     def plan_chunks(self, spark: SparkSession, input_path: str) -> list[tuple[str, list[str]]]:
@@ -104,7 +109,12 @@ class CheckpointedRunner:
         max_chunks: int | None = None,
     ) -> str:
         """Process all not-yet-committed chunks. ``max_chunks`` limits work
-        (used by the kill/resume test to simulate a mid-run crash)."""
+        (used by the kill/resume test to simulate a mid-run crash).
+
+        Only the routed rows of ``pipeline_fn``'s ``(routed, aggs)`` are run:
+        the chunk's aggregates are ``aggregate_stage`` over its routed rows as
+        committed, so the counts describe exactly the bytes that were
+        committed, and the input is scanned and parsed once per chunk."""
         run_id = run_id or uuid.uuid4().hex[:12]
         done = self.completed_chunks(spark)
         processed = 0
@@ -114,57 +124,28 @@ class CheckpointedRunner:
             if max_chunks is not None and processed >= max_chunks:
                 break
             t0 = time.time()
-            df = spark.read.parquet(*files)
-            rows_in = df.count()
-            routed, aggs = self.pipeline_fn(df, spark)
+            seen, totals = Observation(), Observation()
+            df = spark.read.parquet(*files).observe(seen, F.count(F.lit(1)).alias("rows_in"))
+            routed, _ = self.pipeline_fn(df, spark)
+            data = f"{self.out_dir}/data/chunk={chunk_id}"
 
-            # (1) idempotent data commit: overwrite THIS chunk's directory
-            routed.write.mode("overwrite").partitionBy("route").parquet(
-                f"{self.out_dir}/data/chunk={chunk_id}"
-            )
-            aggs.write.mode("overwrite").parquet(f"{self.out_dir}/aggs/chunk={chunk_id}")
-
-            totals = (
-                spark.read.parquet(f"{self.out_dir}/aggs/chunk={chunk_id}")
-                .agg(
-                    F.sum("row_count").alias("rows"),
-                    F.sum("token_count").alias("tokens"),
-                )
-                .collect()[0]
-            )
+            # (1) idempotent data commit: overwrite THIS chunk's directories
+            routed.write.mode("overwrite").partitionBy("route").parquet(data)
+            # The schema keeps the route type and reads a chunk that routed no
+            # rows (no route= directory to infer from) as empty. The totals are
+            # observed after the aggregate's exchange, in the write's result
+            # stage, where each task's update is applied once.
+            aggregate_stage(spark.read.schema(routed.schema).parquet(data)).observe(
+                totals, F.sum("row_count").alias("rows"), F.sum("token_count").alias("tokens")
+            ).write.mode("overwrite").parquet(f"{self.out_dir}/aggs/chunk={chunk_id}")
             wall_ms = int((time.time() - t0) * 1000)
 
             # (2) progress commit: checkpoint row appended AFTER data is down
-            from ..datamodel import CHECKPOINT_SCHEMA
-
-            self._append(
-                spark,
-                "checkpoint",
-                [
-                    {
-                        "run_id": run_id,
-                        "chunk_id": chunk_id,
-                        "rows": int(totals.rows or 0),
-                        "tokens": int(totals.tokens or 0),
-                        "wall_ms": wall_ms,
-                    }
-                ],
-                CHECKPOINT_SCHEMA,
-            )
-            self._append(
-                spark,
-                "lineage",
-                [
-                    {
-                        "run_id": run_id,
-                        "stage": f"chunk:{chunk_id}",
-                        "rows_in": rows_in,
-                        "rows_out": int(totals.rows or 0),
-                        "wall_ms": wall_ms,
-                    }
-                ],
-                "run_id string, stage string, rows_in long, rows_out long, wall_ms long",
-            )
+            n = totals.get
+            row = (run_id, chunk_id, n["rows"] or 0, n["tokens"] or 0, wall_ms, seen.get["rows_in"])
+            spark.createDataFrame([row], CHECKPOINT_SCHEMA).coalesce(1).write.mode(
+                "append"
+            ).parquet(f"{self.out_dir}/checkpoint")
             processed += 1
         return run_id
 
@@ -198,4 +179,13 @@ class CheckpointedRunner:
         )
 
     def metrics(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(f"{self.out_dir}/lineage")
+        """One row per committed chunk: ``run_id, stage="chunk:<id>",
+        rows_in, rows_out, wall_ms``, projected from the checkpoint table.
+        ``rows_in`` is null for chunks committed before it was recorded."""
+        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(f"{self.out_dir}/checkpoint").select(
+            "run_id",
+            F.concat(F.lit("chunk:"), "chunk_id").alias("stage"),
+            "rows_in",
+            F.col("rows").alias("rows_out"),
+            "wall_ms",
+        )

@@ -23,7 +23,7 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="otel-contrib-spark log pipeline")
     ap.add_argument("--input", help="tokens table path (parquet/Iceberg dir)")
     ap.add_argument("--generate-rows", type=int, help="generate a deterministic tokens table of N rows instead of reading --input")
-    ap.add_argument("--out", required=True, help="output root (per-route sinks + checkpoint/lineage)")
+    ap.add_argument("--out", required=True, help="output root (per-route sinks + aggregates + checkpoint)")
     ap.add_argument("--match-once", action="store_true", default=True)
     ap.add_argument("--multicast", dest="match_once", action="store_false")
     ap.add_argument("--files-per-chunk", type=int, default=16)
